@@ -24,6 +24,33 @@ def pytest_configure(config):
     )
 
 
+#: how the reference-parity test modules name the reference checkout's
+#: fixture directory, in a module-level path constant
+_REFERENCE_FIXTURES = os.path.join(os.sep + "reference", "tests", "files")
+
+
+def pytest_collection_finish(session):
+    """Say once, before the run, when the reference fixtures are absent:
+    every test in the modules that read them will error on the missing
+    files. Outcomes are unchanged."""
+    missing, counts = set(), {}
+    for item in session.items:
+        module = getattr(item, "module", None)
+        for value in vars(module).values() if module else ():
+            if isinstance(value, str) and _REFERENCE_FIXTURES in value:
+                path = value[: value.index(_REFERENCE_FIXTURES) + len(_REFERENCE_FIXTURES)]
+                if not os.path.isdir(path):
+                    missing.add(path)
+                    counts[module.__name__] = counts.get(module.__name__, 0) + 1
+                break
+    reporter = session.config.pluginmanager.get_plugin("terminalreporter")
+    if counts and reporter is not None:
+        reporter.write_line(
+            f"reference fixtures missing at {', '.join(sorted(missing))}; "
+            f"{sum(counts.values())} tests in {', '.join(sorted(counts))} will error"
+        )
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("unravelsports-spark-tests")

@@ -68,6 +68,22 @@ def test_nb_argmax_tiebreak_picks_lowest_label(spark):
     assert sum(r["n_docs"] for r in conf) == 2
 
 
+def test_nb_confusion_null_training_label(spark):
+    """A NULL label on a training doc must not crash the model grid build;
+    every held-out doc still gets exactly one prediction."""
+    rows = [
+        (0, "aa", "alpha beta gamma"),
+        (2, None, "delta epsilon"),
+        (4, "zz", "omega psi"),
+        (1, "aa", "alpha beta"),
+        (3, "zz", "omega"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, lang string, text string")
+    conf = nb_confusion(df, label_col="lang").collect()
+    assert sum(r["n_docs"] for r in conf) == 2
+    assert {r["actual"] for r in conf} == {"aa", "zz"}
+
+
 def test_nb_confusion_covers_heldout_half_exactly(spark):
     docs = read_table(spark, SF, "documents")
     conf = nb_confusion(docs, label_col="lang")

@@ -57,6 +57,19 @@ def test_moving_sum_count_equals_single_window(spark, n_ranges):
     assert got == base, n_ranges
 
 
+def test_moving_sum_count_null_values_across_buckets(spark):
+    """NULL values (non-null order keys) at the head of a bucket: the frame
+    sum there comes only from the carry, so a NULL in-bucket sum must not
+    swallow it. Ids 5 and 6 are NULL; the frame at id 6 is ids 3..6 -> 7.0."""
+    rows = [("a", i, None if i in (5, 6) else float(i)) for i in range(10)]
+    df = spark.createDataFrame(rows, "event_type string, event_id bigint, value double")
+    cols = ["event_type", "event_id", "win_sum", "win_n"]
+    base = moving_sum_count(df, "event_type", "event_id", F.col("value"), 3, n_ranges=None)
+    got = moving_sum_count(df, "event_type", "event_id", F.col("value"), 3, n_ranges=5)
+    assert _canon(got, cols) == _canon(base, cols)
+    assert got.filter("event_id = 6").first()["win_sum"] == 7.0
+
+
 @pytest.mark.parametrize("n_ranges", [1, 4, 64, 1000])
 def test_gap_neighbors_equals_single_window(spark, n_ranges):
     df = _series_df(spark)

@@ -25,7 +25,6 @@ from dataclasses import dataclass, field
 from typing import List, Optional, Union
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -33,9 +32,9 @@ from pyspark.sql import types as T
 
 from ..functions.assignment import linear_sum_assignment
 from ..schema import BALL, Column, Group
-from ..session import repartition_for_kernel
 from ..settings import DefaultSettings
 from .formations import Formations
+from .framebatch import Runs, map_runs
 
 _OUT_FIELDS = [
     T.StructField(Column.GAME_ID, T.StringType()),
@@ -179,33 +178,47 @@ def _detect_group(d, forms, state_cfg, orientation, home_team_id):
             )
 
 
-def _frames_rows(pdf, forms, state_cfg, orientation, home_id, strict=True):
-    """Ordered per-frame detection over one game's rows, mutating `forms`
-    hysteresis state (K13) as it goes. Shared by the batch kernel and the
-    Structured Streaming stateful operator (streaming/efpi_stream.py) so the
-    two paths cannot diverge. Returns output tuples (game_id, period_id,
-    frame_id, id, team_id, position, formation, ball_owning_team_id).
-    ``strict=False`` (chunked batch kernel) emits null position/formation
-    where the reference would raise on a missing team state — the chunked
-    caller forward-fills those from the previous chunk's output."""
-    pdf = pdf.sort_values([Column.FRAME_ID, Column.OBJECT_ID], kind="stable")
-    arrays = {c: pdf[c].to_numpy() for c in (
-        "x", "y", "team_id", "ball_owning_team_id", "id", "position_name")}
-    frame_ids = pdf[Column.FRAME_ID].to_numpy()
-    periods = pdf[Column.PERIOD_ID].to_numpy()
-    game = pdf[Column.GAME_ID].iloc[0]
-    bounds = np.flatnonzero(np.r_[True, frame_ids[1:] != frame_ids[:-1], True])
+#: kernel input columns of per-frame detection, batch and streaming alike
+_FRAME_COLS = [Column.GAME_ID, Column.PERIOD_ID, Column.FRAME_ID, Column.X, Column.Y,
+               Column.TEAM_ID, Column.BALL_OWNING_TEAM_ID, Column.OBJECT_ID,
+               Column.POSITION_NAME]
+_FRAME_RUNS = Runs(
+    sort_by=[Column.FRAME_ID, Column.OBJECT_ID], split_on=[Column.FRAME_ID], columns=_FRAME_COLS
+)
+
+
+def _detection_rows(runs, key_cols, forms, state_cfg, orientation, home_id, strict=True):
+    """Ordered detection over one game's runs (frames from
+    ``_FRAME_RUNS.split`` or segments from ``_segment_runs``), mutating
+    `forms` hysteresis state (K13) as it goes. Shared by the batch kernels
+    and the Structured Streaming stateful operator
+    (streaming/efpi_stream.py) so the paths cannot diverge. Returns one
+    output tuple per object: the run's ``key_cols`` values, then id,
+    team_id, position, formation, ball_owning_team_id. ``strict=False``
+    (chunked batch kernel) emits null position/formation where the
+    reference would raise on a missing team state — the chunked caller
+    forward-fills those from the previous chunk's output."""
     out = []
-    for s, e in zip(bounds[:-1], bounds[1:]):
-        d = {k: v[s:e] for k, v in arrays.items()}
+    for d in runs:
         _detect_group(d, forms, state_cfg, orientation, home_id)
         positions, formation_names = forms.lookup(d["id"], d["team_id"], strict=strict)
-        for i in range(e - s):
-            out.append(
-                (game, periods[s], frame_ids[s], d["id"][i], d["team_id"][i],
-                 positions[i], formation_names[i], d["ball_owning_team_id"][i])
-            )
+        key = tuple(d[c][0] for c in key_cols)
+        out.extend(
+            (*key, *row)
+            for row in zip(d["id"], d["team_id"], positions, formation_names,
+                           d["ball_owning_team_id"])
+        )
     return out
+
+
+def _segment_runs(seg_cols):
+    """One run per (period, segment, owning team): a duration bucket can
+    contain possessions of both teams."""
+    return Runs(
+        sort_by=[Column.PERIOD_ID, *seg_cols, Column.BALL_OWNING_TEAM_ID, Column.OBJECT_ID],
+        split_on=[Column.PERIOD_ID, *seg_cols, Column.BALL_OWNING_TEAM_ID],
+        columns=[Column.GAME_ID, "x", "y", "team_id", "id", "position_name"],
+    )
 
 
 @dataclass
@@ -394,17 +407,13 @@ class EFPI:
             and self.stateless_chunk_frames is not None
         )
 
-        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        def per_batch(frames):
             forms = Formations(pl_len, pl_wid, forms_cfg)
-            out = _frames_rows(
-                pdf, forms, state_cfg, orientation, home_id, strict=not chunked
+            return _detection_rows(
+                frames, Group.BY_FRAME, forms, state_cfg, orientation, home_id, strict=not chunked
             )
-            return pd.DataFrame(out, columns=[f.name for f in schema.fields])
 
-        cols = [Column.GAME_ID, Column.PERIOD_ID, Column.FRAME_ID, Column.X, Column.Y,
-                Column.TEAM_ID, Column.BALL_OWNING_TEAM_ID, Column.OBJECT_ID,
-                Column.POSITION_NAME]
-        sel = df.select(*cols)
+        sel = df.select(*_FRAME_COLS)
         # With hysteresis ON the state is serial within a match: frame-mode
         # groups by game_id alone — parallelism = number of games, memory
         # bounded by one match (inherent to the semantics; the streaming
@@ -420,7 +429,7 @@ class EFPI:
         # and the forward fill below patches those nulls from the previous
         # chunks' output, restoring the exact unsharded borrow semantics
         # across chunk boundaries; VERDICT r4 item 6.)
-        if state_cfg["change_threshold"] is None and self.stateless_chunk_frames is not None:
+        if chunked:
             sel = sel.withColumn(
                 "_chunk",
                 F.floor(F.col(Column.FRAME_ID) / F.lit(self.stateless_chunk_frames)).cast("long"),
@@ -428,11 +437,7 @@ class EFPI:
             keys = [Column.GAME_ID, "_chunk"]
         else:
             keys = [Column.GAME_ID]
-        out = (
-            repartition_for_kernel(sel, keys)
-            .groupBy(*keys)
-            .applyInPandas(kernel, schema)
-        )
+        out = map_runs(sel, _FRAME_RUNS, per_batch, schema, keys)
         if chunked:
             # cross-chunk detection carry: last-non-null per (game, object)
             # in frame order IS the team state the unsharded kernel would
@@ -461,41 +466,12 @@ class EFPI:
             fields = fields[:2] + [T.StructField(seg_col, T.LongType())] + fields[2:]
         schema = T.StructType(fields)
 
-        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        seg_cols = [seg_col] if seg_col else []
+        key_cols = [Column.GAME_ID, Column.PERIOD_ID, *seg_cols]
+
+        def per_batch(segments):
             forms = Formations(pl_len, pl_wid, forms_cfg)
-            # sort so each (period, segment, owning-team) run is contiguous —
-            # a duration bucket can contain possessions of both teams
-            sort_keys = (
-                [Column.PERIOD_ID]
-                + ([seg_col] if seg_col else [])
-                + [Column.BALL_OWNING_TEAM_ID, Column.OBJECT_ID]
-            )
-            pdf = pdf.sort_values(sort_keys, kind="stable")
-            arrays = {c: pdf[c].to_numpy() for c in (
-                "x", "y", "team_id", "ball_owning_team_id", "id", "position_name")}
-            game = pdf[Column.GAME_ID].iloc[0]
-            periods = pdf[Column.PERIOD_ID].to_numpy()
-            segs = pdf[seg_col].to_numpy() if seg_col else None
-            bot_arr = pdf[Column.BALL_OWNING_TEAM_ID].to_numpy()
-            key_cols = [periods.astype(str), bot_arr.astype(str)] + (
-                [segs.astype(str)] if seg_col else []
-            )
-            keys = np.stack(key_cols, axis=1)
-            changed = np.r_[True, np.any(keys[1:] != keys[:-1], axis=1)]
-            bounds = np.flatnonzero(np.r_[changed, True])
-            out = []
-            for s, e in zip(bounds[:-1], bounds[1:]):
-                d = {k: v[s:e] for k, v in arrays.items()}
-                _detect_group(d, forms, state_cfg, orientation, home_id)
-                positions, formation_names = forms.lookup(d["id"], d["team_id"])
-                for i in range(e - s):
-                    row = [game, periods[s]]
-                    if seg_col:
-                        row.append(segs[s])
-                    row += [d["id"][i], d["team_id"][i], positions[i],
-                            formation_names[i], d["ball_owning_team_id"][i]]
-                    out.append(tuple(row))
-            return pd.DataFrame(out, columns=[f.name for f in schema.fields])
+            return _detection_rows(segments, key_cols, forms, state_cfg, orientation, home_id)
 
         # Same parallelism split as _fit_frames: hysteresis state is serial
         # within a match, but with change_threshold=None every segment
@@ -503,17 +479,11 @@ class EFPI:
         # A whole (period, segment) always lands in one bucket, so each
         # detection group stays intact.
         if state_cfg["change_threshold"] is None:
-            seg_hash = F.xxhash64(
-                Column.PERIOD_ID, *( [seg_col] if seg_col else [] )
-            )
+            seg_hash = F.xxhash64(Column.PERIOD_ID, *seg_cols)
             seg_df = seg_df.withColumn(
                 "_segchunk", F.pmod(seg_hash, F.lit(self.stateless_segment_buckets))
             )
             keys = [Column.GAME_ID, "_segchunk"]
         else:
             keys = [Column.GAME_ID]
-        return (
-            repartition_for_kernel(seg_df, keys)
-            .groupBy(*keys)
-            .applyInPandas(kernel, schema)
-        )
+        return map_runs(seg_df, _segment_runs(seg_cols), per_batch, schema, keys)

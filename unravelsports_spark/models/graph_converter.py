@@ -7,17 +7,18 @@ unravel/utils/objects/default_graph_converter.py:315-393 Spark-first:
 
 - sample / incomplete-frame drop / padding are native DataFrame ops (modulo
   filter P5, semi-join J3, aggregate + sequence/explode row synthesis O12);
-- the per-frame kernel is an Arrow grouped-map pandas UDF batched over
-  (game_id, period_id, frame-chunk) groups — one shuffle total, frames looped
-  inside the UDF so Arrow/serialization overhead is amortized; each frame's
-  matrices are pure NumPy (functions/graph_features.py, golden-tested);
+- the per-frame kernel runs on the shared frame-batch runner
+  (models/framebatch.py) over (game_id, period_id, frame range) groups — one
+  shuffle total, frames looped inside the UDF so Arrow/serialization overhead
+  is amortized; each frame's matrices are pure NumPy
+  (functions/graph_features.py, golden-tested);
 - output is a DataFrame of nested arrays + shape columns, written/read as
   parquet (the reference's gzip-pickle sink S4 ↔ our parquet graph sink).
 
-Scale posture: groups are bounded by frames_per_batch so executor memory is
-flat; everything before the single groupBy is embarrassingly parallel over
-input splits, and the group key starts with game_id so a 100 TB / many-match
-corpus spreads evenly across a large cluster.
+Scale posture: groups are bounded by framebatch.BATCH_FRAMES so executor
+memory is flat; everything before the single groupBy is embarrassingly
+parallel over input splits, and the group key starts with game_id so a
+100 TB / many-match corpus spreads evenly across a large cluster.
 """
 
 from __future__ import annotations
@@ -26,7 +27,6 @@ from dataclasses import dataclass, field
 from typing import Callable, List, Optional
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -50,8 +50,8 @@ from ..functions.graph_features_batch import (
     compute_node_features_batch,
 )
 from ..schema import BALL, Column, Group
-from ..session import repartition_for_kernel
 from ..settings import GraphSettings
+from .framebatch import Runs, map_runs
 
 MATRIX = T.ArrayType(T.ArrayType(T.DoubleType()))
 
@@ -80,6 +80,18 @@ def graph_frames_schema(label_col: str = "label", graph_id_col: str = "graph_id"
     )
 
 
+def matrix_cells(adj, edge, node) -> tuple:
+    """The a/e/x cells and their shapes, in graph_frames_schema order.
+    List-of-rows (ndarray) cells: Arrow consumes these without a
+    per-element Python round-trip."""
+    return (list(adj.astype(float)), list(edge), list(node), *adj.shape, *edge.shape, *node.shape)
+
+
+def label_cell(value):
+    """Label column value: null for a missing (None/NaN) label, else int."""
+    return None if value is None or (isinstance(value, float) and np.isnan(value)) else int(value)
+
+
 @dataclass
 class SoccerGraphConverter:
     dataset: DataFrame
@@ -98,8 +110,6 @@ class SoccerGraphConverter:
     global_feature_cols: List[str] = field(default_factory=list)
     global_feature_type: str = "ball"
     additional_feature_cols: List[str] = field(default_factory=list)
-
-    frames_per_batch: int = 20_000
 
     def __post_init__(self):
         self.node_feature_funcs = (
@@ -237,15 +247,8 @@ class SoccerGraphConverter:
         node_funcs, edge_funcs = self.node_feature_funcs, self.edge_feature_funcs
         opts = self.feature_opts
         global_cols, global_type = self.global_feature_cols, self.global_feature_type
-        extra_cols = self.additional_feature_cols
         graph_id_col, label_col, prediction = self.graph_id_col, self.label_col, self.prediction
         random_seed = self.random_seed
-
-        array_cols = [
-            "x", "y", "z", "v", "vx", "vy", "vz", "a", "ax", "ay", "az",
-            "team_id", "position_name", "ball_owning_team_id", "is_ball_carrier", "id",
-            graph_id_col, label_col, *global_cols, *extra_cols,
-        ]
 
         # Batched fast path: default features + dense adjacency → vectorize
         # over same-size frames (graph_features_batch.py; several-fold less
@@ -281,46 +284,39 @@ class SoccerGraphConverter:
                     results[i] = (adj, np.nan_to_num(edge_b[j][nz]), node_b[j])
             return results
 
-        def run_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values(
-                by=[Column.FRAME_ID, "_sort_key", Column.OBJECT_ID],
-                kind="stable",
-            )
-            arrays = {c: pdf[c].to_numpy() for c in array_cols}
-            frame_ids = pdf[Column.FRAME_ID].to_numpy()
-            bounds = np.flatnonzero(np.r_[True, frame_ids[1:] != frame_ids[:-1], True])
-            meta = pdf[[Column.GAME_ID, Column.PERIOD_ID, Column.FRAME_ID]]
+        runs = Runs(
+            sort_by=[Column.FRAME_ID, "_sort_key", Column.OBJECT_ID],
+            split_on=[Column.FRAME_ID],
+            columns=kernel_cols,
+        )
 
-            frames, starts = [], []
-            for s, e in zip(bounds[:-1], bounds[1:]):
-                d = {k: v[s:e] for k, v in arrays.items()}
+        def per_batch(frames):
+            kept = []
+            for d in frames:
                 if drop_incomplete and len(np.unique(d["team_id"])) != 3:
                     continue
                 if random_seed is not False and random_seed is not None:
-                    n = e - s
-                    seed = None if random_seed is True else int(random_seed) + int(frame_ids[s])
-                    perm = np.random.default_rng(seed).permutation(n)
+                    seed = None if random_seed is True else int(random_seed) + int(d[Column.FRAME_ID][0])
+                    perm = np.random.default_rng(seed).permutation(len(d["team_id"]))
                     d = {k: v[perm] for k, v in d.items()}
                 if not np.all(d[graph_id_col] == d[graph_id_col][0]):
                     raise ValueError("graph_id not constant within a frame group")
                 if not prediction and not np.all(d[label_col] == d[label_col][0]):
                     raise ValueError("label not constant within a frame group")
-                frames.append(d)
-                starts.append(s)
+                kept.append(d)
 
             if use_batch:
-                results = compute_batched(frames)
+                results = compute_batched(kept)
             else:
                 results = []
-                for d in frames:
+                for d in kept:
                     fk = frame_kwargs(d, settings)
                     adj = compute_adjacency_matrix(settings, **fk)
                     edge, _ = compute_edge_features(adj, edge_funcs, opts, settings, **fk)
                     node, _ = compute_node_features(node_funcs, opts, settings, **fk)
                     results.append((adj, edge, node))
 
-            out = []
-            for s, d, (adj, edge, node) in zip(starts, frames, results):
+            for d, (adj, edge, node) in zip(kept, results):
                 if global_cols:
                     bad = [c for c in global_cols if not np.all(d[c] == d[c][0])]
                     if bad:
@@ -329,41 +325,12 @@ class SoccerGraphConverter:
                     ball_rows = np.where(d["team_id"] == settings.ball_id)[0]
                     ball_idx = ball_rows if len(ball_rows) else 0
                     node = add_global_features(node, gvals, global_type, ball_idx)
-                m = meta.iloc[s]
-                label_val = d[label_col][0]
-                out.append(
-                    {
-                        Column.GAME_ID: m[Column.GAME_ID],
-                        Column.PERIOD_ID: m[Column.PERIOD_ID],
-                        "frame_id": int(m[Column.FRAME_ID]),
-                        # list-of-rows (ndarray) cells: Arrow consumes these
-                        # without a per-element Python round-trip
-                        "a": list(adj.astype(float)),
-                        "e": list(edge),
-                        "x": list(node),
-                        "a_shape_0": adj.shape[0],
-                        "a_shape_1": adj.shape[1],
-                        "e_shape_0": edge.shape[0],
-                        "e_shape_1": edge.shape[1],
-                        "x_shape_0": node.shape[0],
-                        "x_shape_1": node.shape[1],
-                        graph_id_col: str(d[graph_id_col][0]),
-                        label_col: None if label_val is None or (isinstance(label_val, float) and np.isnan(label_val)) else int(label_val),
-                        "object_ids": list(d["id"]),
-                        "ball_owning_team_id": d["ball_owning_team_id"][0],
-                    }
+                yield (
+                    d[Column.GAME_ID][0], d[Column.PERIOD_ID][0], int(d[Column.FRAME_ID][0]),
+                    *matrix_cells(adj, edge, node),
+                    str(d[graph_id_col][0]), label_cell(d[label_col][0]),
+                    list(d["id"]), d["ball_owning_team_id"][0],
                 )
-            return pd.DataFrame(out, columns=[f.name for f in schema.fields])
 
-        chunk = (F.col(Column.FRAME_ID) / self.frames_per_batch).cast("long")
-        keys = [Column.GAME_ID, Column.PERIOD_ID, "_chunk"]
-        staged = (
-            df.select(*kernel_cols)
-            .withColumn("_sort_key", sort_key)
-            .withColumn("_chunk", chunk)
-        )
-        return (
-            repartition_for_kernel(staged, keys)
-            .groupBy(*keys)
-            .applyInPandas(run_batch, schema=schema)
-        )
+        staged = df.select(*kernel_cols).withColumn("_sort_key", sort_key)
+        return map_runs(staged, runs, per_batch, schema)

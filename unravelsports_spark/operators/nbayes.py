@@ -108,7 +108,7 @@ def nb_confusion(
     grid_src = df.sparkSession.createDataFrame(
         [
             (lab, b, counts.get((lab, b), 0), tots[lab], n_docs[lab], n_train)
-            for lab in sorted(tots)
+            for lab in sorted(tots, key=lambda lab: (lab is None, lab))
             for b in range(n_buckets)
         ],
         "label string, bucket bigint, c bigint, tot bigint, n_docs bigint, n_train bigint",

@@ -159,8 +159,9 @@ def moving_sum_count(
     return (
         joined.withColumn(
             out_sum,
+            # NULL only when the in-bucket frame and the carry both are
             F.when(m <= 0, F.col("_lsum")).otherwise(
-                F.col("_lsum") + F.coalesce(cs, F.lit(0))
+                F.coalesce(F.col("_lsum") + cs, F.col("_lsum"), cs)
             ),
         )
         .withColumn(

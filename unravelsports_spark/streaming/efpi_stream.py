@@ -10,7 +10,7 @@ exactly `applyInPandasWithState` — the per-game `DetectedFormation` dict is
 serialized into GroupState between micro-batches and rehydrated on the next
 trigger.
 
-The per-frame computation is `models.efpi._frames_rows`, the same function
+The per-frame computation is `models.efpi._detection_rows`, the same function
 the batch kernel calls, so batch and streaming results are identical when
 frames arrive in order (tests/test_streaming_efpi.py proves two micro-batches
 == one batch run). Late/out-of-order frames within a micro-batch are ordered
@@ -34,9 +34,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupStateTimeout
 
-from ..models.efpi import _OUT_FIELDS, _frames_rows
+from ..models.efpi import _FRAME_COLS, _FRAME_RUNS, _OUT_FIELDS, _detection_rows
 from ..models.formations import DetectedFormation, Formations
-from ..schema import Column
+from ..schema import Column, Group
 from ..settings import DefaultSettings
 
 _STREAM_SCHEMA = T.StructType(
@@ -103,15 +103,14 @@ def streaming_formation_detection(
         forms = Formations(pl_len, pl_wid, formations)
         if state.exists:
             _restore_state(forms, state.get[0])
-        out = _frames_rows(pdf, forms, state_cfg, orientation, home_id)
+        out = _detection_rows(
+            _FRAME_RUNS.split(pdf), Group.BY_FRAME, forms, state_cfg, orientation, home_id
+        )
         state.update((_serialize_state(forms),))
         yield pd.DataFrame(out, columns=out_cols)
 
-    cols = [Column.GAME_ID, Column.PERIOD_ID, Column.FRAME_ID, Column.X, Column.Y,
-            Column.TEAM_ID, Column.BALL_OWNING_TEAM_ID, Column.OBJECT_ID,
-            Column.POSITION_NAME]
     return (
-        df.select(*cols)
+        df.select(*_FRAME_COLS)
         .groupBy(Column.GAME_ID)
         .applyInPandasWithState(
             fn, _STREAM_SCHEMA, _STATE_SCHEMA, "append", GroupStateTimeout.NoTimeout
