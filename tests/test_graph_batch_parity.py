@@ -91,3 +91,39 @@ def test_batch_no_ball_frame():
         fk = frame_kwargs(d, gs)
         node, _ = compute_node_features(DEFAULT_NODE_FEATURES, None, gs, **fk)
         np.testing.assert_allclose(node_b[i], node, rtol=0, atol=4e-15)
+
+
+def test_batch_angles_match_contiguous_evaluation():
+    """The angle columns (node velocity and goal/ball angles, edge position
+    angles) equal, bit for bit, `np.arctan2` evaluated on contiguous copies
+    of the vector components: the kernel never feeds arctan2 strided views."""
+    from unravelsports_spark.functions.normalize import normalize_sincos, unit_vectors
+
+    rng = np.random.default_rng(3)
+    gs = GraphSettings(home_team_id="home", away_team_id="away")
+    frames = _random_frames(rng, n_frames=40)
+    bk = batch_kwargs({k: np.stack([d[k] for d in frames]) for k in frames[0]}, gs)
+    node_b = compute_node_features_batch(bk, gs)
+    edge_b = compute_edge_channels_batch(bk, gs)
+
+    def angle(vec):
+        return np.arctan2(vec[..., 1].copy(), vec[..., 0].copy())
+
+    def sincos(ang):
+        return [np.nan_to_num(normalize_sincos(f(ang))) for f in (np.sin, np.cos)]
+
+    pos = bk["position"]
+    goal = np.asarray(gs.goal_mouth_position, dtype=float)
+    vel_ang = (angle(unit_vectors(bk["velocity"])) + np.pi) / (2.0 * np.pi)
+    want = {
+        (3, 4): sincos(vel_ang),
+        (10, 11): sincos(angle(goal - pos)),
+        (12, 13): sincos(angle(bk["ball_position"][:, None, :] - pos)),
+    }
+    for cols, expected in want.items():
+        for c, e in zip(cols, expected):
+            np.testing.assert_array_equal(node_b[..., c], e, err_msg=f"node column {c}")
+    pos2 = pos[..., :2]
+    ang = np.nan_to_num(angle(pos2[:, :, None, :] - pos2[:, None, :, :]))
+    np.testing.assert_array_equal(edge_b[..., 2], normalize_sincos(np.nan_to_num(np.cos(ang))))
+    np.testing.assert_array_equal(edge_b[..., 3], normalize_sincos(np.nan_to_num(np.sin(ang))))

@@ -231,3 +231,49 @@ def test_discover_objects_explicit_team_mapping(spark):
     objs = discover_objects(wide, team_of=lambda oid: team.get(oid))
     got = {o.object_id: o.team_id for o in objs}
     assert got == {"home_1": "tA", "home_2": "tA", "away_9": "tB", "ball": "ball"}
+
+
+def test_null_distance_player_is_never_the_carrier(spark):
+    """A player whose distance to the ball is NULL (x unknown, y known: the row
+    survives finalize_kinematics) must not be chosen over a player at a known
+    distance; a (NULL, id) struct is not NULL and would sort first."""
+    rows = [
+        ("g", 1, 0, "a1", "away", None, 5.0, 0.0),
+        ("g", 1, 0, "h1", "home", 1.0, 0.0, 0.0),
+        ("g", 1, 0, "ball", "ball", 0.0, 0.0, 0.0),
+    ]
+    df = spark.createDataFrame(
+        rows, "game_id string, period_id long, frame_id long, id string, team_id string, "
+              "x double, y double, z double",
+    ).withColumn("ball_owning_team_id", F.lit(None).cast("string"))
+    df = finalize_kinematics(df.withColumns({c: F.lit(None) for c in ("dx", "dy", "dz", "dt")}))
+    out = {r.id: r for r in infer_ball_ownership(df).collect()}
+    assert set(out) == {"a1", "h1", "ball"}
+    assert {r.ball_owning_team_id for r in out.values()} == {"home"}
+    assert [i for i, r in out.items() if r.is_ball_carrier] == ["h1"]
+
+
+def test_melt_quotes_in_ids_and_positions(spark):
+    """Object ids, teams and positions are literals, never SQL text: quotes
+    and backticks in them survive the melt unchanged."""
+    from unravelsports_spark.operators.melt import melt_wide_tracking
+
+    wide = spark.createDataFrame(pd.DataFrame([{
+        "period_id": 1, "timestamp": 0, "frame_id": 0, "ball_state": "alive",
+        "ball_owning_team_id": None,
+        "o'neil_x": 1.0, "o'neil_y": 2.0, "b`q_x": 3.0, "b`q_y": 4.0,
+        "ball_x": 0.0, "ball_y": 0.0,
+    }]))
+    objects = [
+        TrackedObject("o'neil", "it's home", "d'arc"),
+        TrackedObject("b`q", "away", None),
+        TrackedObject("ball", "ball", None),
+    ]
+    rows = melt_wide_tracking(wide, objects, "g'1").collect()
+    got = {r.id: (r.team_id, r.position_name, r.x, r.y, r.z) for r in rows}
+    assert got == {
+        "o'neil": ("it's home", "d'arc", 1.0, 2.0, 0.0),
+        "b`q": ("away", None, 3.0, 4.0, 0.0),
+        "ball": ("ball", None, 0.0, 0.0, 0.0),
+    }
+    assert {r.game_id for r in rows} == {"g'1"}

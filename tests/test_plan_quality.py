@@ -800,3 +800,27 @@ def test_sequence_packing_two_level_prefix_sum(spark):
     assert "hashpartitioning(source#" in plan
     assert "_pkb" in plan
     assert "BroadcastHashJoin" in plan
+
+
+@pytest.mark.parametrize("smoothing, exchanges", [(True, 3), (False, 2)])
+def test_tracking_ingest_shuffles_per_match(spark, smoothing, exchanges):
+    """One match through `TrackingDataset.load_wide`: the (object, period)
+    shuffle for the kinematics windows, one more after the smoothing UDF,
+    and the frame shuffle that ball ownership and the dedup share. The roster
+    rides the melt as literals and ownership is one per-frame window, so no
+    join or broadcast is planned and the smoothing UDF runs once."""
+    from unravelsports_spark.datasets.tracking import TrackingDataset
+    from unravelsports_spark.settings import DefaultSettings
+
+    from .test_ingest import OBJECTS, _wide_fixture
+
+    off = {} if smoothing else {"player_smoothing": None, "ball_smoothing": None}
+    df = TrackingDataset.load_wide(
+        _wide_fixture(spark), OBJECTS, DefaultSettings(home_team_id="home", away_team_id="away"),
+        game_id="g", **off,
+    ).data
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == exchanges
+    assert "BroadcastExchange" not in plan
+    assert plan.count("FlatMapGroupsInPandas") == int(smoothing)
+    assert "SortMergeJoin" not in plan and "BroadcastHashJoin" not in plan

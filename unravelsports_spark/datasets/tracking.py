@@ -74,7 +74,9 @@ class TrackingDataset:
             settings.orientation = "BALL_OWNING_TEAM"
         if infer_goalkeepers_flag:
             df = infer_goalkeepers(df, settings.pitch_dimensions.pitch_length)
-        df = df.dropDuplicates([Column.OBJECT_ID, Column.FRAME_ID, Column.PERIOD_ID])
+        # game_id is one literal here; keying on it lets the dedup reuse the
+        # frame partitioning of the ownership window instead of a new shuffle
+        df = df.dropDuplicates([Column.GAME_ID, Column.OBJECT_ID, Column.FRAME_ID, Column.PERIOD_ID])
         return cls(data=df, settings=settings)
 
     # -- ML utilities -------------------------------------------------------

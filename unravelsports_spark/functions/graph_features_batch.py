@@ -63,6 +63,13 @@ def _per_class_clip(values, is_ball, ball_max, player_max):
     return np.clip(values / maxima, 0.0, 1.0)
 
 
+def _angle(vec: np.ndarray) -> np.ndarray:
+    """arctan2(y, x) over the last axis, on contiguous copies of the y and x
+    components: NumPy's arctan2 on strided views is not guaranteed to round
+    the same way as on contiguous input."""
+    return np.arctan2(np.ascontiguousarray(vec[..., 1]), np.ascontiguousarray(vec[..., 0]))
+
+
 def compute_node_features_batch(bk: dict, settings) -> np.ndarray:
     """(B, N, 15) node features, columns ordered exactly as the per-frame
     driver over DEFAULT_NODE_FEATURES."""
@@ -79,7 +86,7 @@ def compute_node_features_batch(bk: dict, settings) -> np.ndarray:
     )
 
     uv = unit_vectors(vel)
-    ang = (np.arctan2(uv[..., 1], uv[..., 0]) + np.pi) / (2.0 * np.pi)
+    ang = (_angle(uv) + np.pi) / (2.0 * np.pi)
     vel_sin = normalize_sincos(np.sin(ang))
     vel_cos = normalize_sincos(np.cos(ang))
 
@@ -98,11 +105,11 @@ def compute_node_features_batch(bk: dict, settings) -> np.ndarray:
     ball_col = np.where(is_ball, 1, 0.1)
 
     gvec = goal - pos
-    gang = np.arctan2(gvec[..., 1], gvec[..., 0])
+    gang = _angle(gvec)
     g_sin = normalize_sincos(np.sin(gang))
     g_cos = normalize_sincos(np.cos(gang))
     bvec = bk["ball_position"][:, None, :] - pos
-    bang = np.arctan2(bvec[..., 1], bvec[..., 0])
+    bang = _angle(bvec)
     b_sin = normalize_sincos(np.sin(bang))
     b_cos = normalize_sincos(np.cos(bang))
 
@@ -139,7 +146,7 @@ def compute_edge_channels_batch(bk: dict, settings) -> np.ndarray:
     ) * np.sign(vdiff)
 
     pvec = pos2[:, :, None, :] - pos2[:, None, :, :]  # (B, N, N, 2)
-    ang = np.nan_to_num(np.arctan2(pvec[..., 1], pvec[..., 0]))
+    ang = np.nan_to_num(_angle(pvec))
     a_cos = normalize_sincos(np.nan_to_num(np.cos(ang)))
     a_sin = normalize_sincos(np.nan_to_num(np.sin(ang)))
 

@@ -5,7 +5,9 @@ Re-expresses /root/reference/unravel/soccer/dataset/kloppy_polars.py:313-491
 and unravel/soccer/dataset/utils.py:6-39 Spark-first: the diff/divide/fill
 chain is pure Catalyst window work (whole-stage codegen, one shuffle on the
 (id, period) partition key shared by both stages); only the polynomial
-smoothing needs Python, as an Arrow grouped-map over (id, period) series.
+smoothing needs Python, as an Arrow grouped-map over (id, period) series. Its
+output carries no partitioning, so smoothing costs the acceleration window one
+more (id, period) shuffle.
 """
 
 from __future__ import annotations

@@ -3,9 +3,11 @@
 Re-expresses /root/reference/unravel/soccer/dataset/kloppy_polars.py:293-311,
 493-544: a kloppy wide frame has one column per object per coordinate
 (`<object_id>_x`, `<object_id>_y`, ball also `ball_z`). Spark's `stack`
-emits every (object, x, y, z) triple in one generator pass — no per-object
-loop, no horizontal concat, one projection. Object→(team, position) metadata
-arrives via a broadcast join against the roster."""
+emits every (object, team, position, x, y, z) row in one generator pass — no
+per-object loop, no horizontal concat, one projection. The roster's team and
+position ride the generator as literals, so the melt needs no join. The
+generator is built from Column expressions: ids, teams and positions are
+literals, never SQL text."""
 
 from __future__ import annotations
 
@@ -35,32 +37,44 @@ def melt_wide_tracking(
         Column.BALL_OWNING_TEAM_ID,
     ),
 ) -> DataFrame:
-    objects = list(objects)
     columns = set(df.columns)
-    triples = []
+    rows = []
     for obj in objects:
         xc, yc, zc = (f"{obj.object_id}_{c}" for c in ("x", "y", "z"))
         if xc not in columns:
             continue
-        z_expr = f"cast(`{zc}` as double)" if zc in columns else "cast(0.0 as double)"
-        triples.append(
-            f"'{obj.object_id}', cast(`{xc}` as double), cast(`{yc}` as double), {z_expr}"
-        )
-    if not triples:
+        rows += [
+            F.lit(obj.object_id),
+            F.lit(obj.team_id).cast("string"),
+            F.lit(obj.position_name).cast("string"),
+            *(_col(c).cast("double") for c in (xc, yc)),
+            _col(zc).cast("double") if zc in columns else F.lit(0.0),
+        ]
+    if not rows:
         raise ValueError("no <object_id>_x columns found to unpivot")
 
-    stack_expr = f"stack({len(triples)}, {', '.join(triples)}) as (`{Column.OBJECT_ID}`, x, y, z)"
-    idx = [c for c in index_columns if c in columns]
-    long = df.selectExpr(*[f"`{c}`" for c in idx], stack_expr)
-
-    roster = long.sparkSession.createDataFrame(
-        [(o.object_id, o.team_id, o.position_name) for o in objects],
-        schema=f"{Column.OBJECT_ID} string, {Column.TEAM_ID} string, {Column.POSITION_NAME} string",
+    idx = [_col(c) for c in index_columns if c in columns]
+    long = df.select(
+        *idx,
+        F.stack(F.lit(len(rows) // 6), *rows).alias(
+            Column.OBJECT_ID, Column.TEAM_ID, Column.POSITION_NAME, Column.X, Column.Y, Column.Z
+        ),
     )
-    long = (
-        long.join(F.broadcast(roster), on=Column.OBJECT_ID, how="left")
-        .withColumn(Column.GAME_ID, F.lit(game_id))
+    return long.select(
+        Column.OBJECT_ID,
+        *idx,
+        Column.X,
+        Column.Y,
         # ball z defaults to 0.0 when entirely absent (reference :516-521)
-        .withColumn(Column.Z, F.when(F.col(Column.Z).isNull() & (F.col(Column.TEAM_ID) == BALL), 0.0).otherwise(F.col(Column.Z)))
+        F.when(F.col(Column.Z).isNull() & (F.col(Column.TEAM_ID) == BALL), 0.0)
+        .otherwise(F.col(Column.Z))
+        .alias(Column.Z),
+        Column.TEAM_ID,
+        Column.POSITION_NAME,
+        F.lit(game_id).alias(Column.GAME_ID),
     )
-    return long
+
+
+def _col(name: str):
+    """A column by its literal name, whatever characters it holds."""
+    return F.col("`" + name.replace("`", "``") + "`")

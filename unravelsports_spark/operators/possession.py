@@ -3,10 +3,11 @@
 Re-expresses /root/reference/unravel/soccer/dataset/kloppy_polars.py:546-723
 Spark-first:
 
-- J1: players ⟕ per-frame ball position (both sides co-partition on the frame
-  key — a single shuffle, no broadcast needed since both scale with frames);
+- J1 as a window: the ball position, the owner and the closest player are
+  per-frame aggregates over one `Window.partitionBy(frame)`, so the frame
+  shuffle is paid once and no ball self-join or join-back runs;
 - A4: conditional argmin-within-group via `min_by` over a (dist, id) struct —
-  deterministic tie-break, no second shuffle beyond the frame aggregation;
+  deterministic tie-break (lowest id), over players with a known distance;
 - W2: goalkeeper inference via partitioned min over (frame, team).
 """
 
@@ -21,59 +22,53 @@ from ..schema import BALL, Column, Group
 def infer_ball_ownership(df: DataFrame, ball_carrier_threshold: float = 25.0) -> DataFrame:
     """Fill null ball_owning_team_id / derive is_ball_carrier from the closest
     player to the ball within the threshold; frames still lacking an owner are
-    dropped (reference :546-667)."""
-    ball = df.filter(F.col(Column.TEAM_ID) == BALL).select(
-        *Group.BY_FRAME,
-        F.col(Column.X).alias("ball_x"),
-        F.col(Column.Y).alias("ball_y"),
-        F.col(Column.Z).alias("ball_z"),
+    dropped (reference :546-667). Rows with a NULL frame key get no owner and
+    are dropped too. Assumes at most one ball position per frame."""
+    frame = Window.partitionBy(*Group.BY_FRAME)
+    is_ball = F.col(Column.TEAM_ID) == BALL
+    is_player = F.coalesce(F.col(Column.TEAM_ID) != BALL, F.lit(False))
+    ball_x, ball_y, ball_z = (
+        F.max(F.when(is_ball, F.col(c))).over(frame) for c in (Column.X, Column.Y, Column.Z)
     )
-    players = df.filter(F.col(Column.TEAM_ID) != BALL)
     dist = F.sqrt(
-        (F.col(Column.X) - F.col("ball_x")) ** 2
-        + (F.col(Column.Y) - F.col("ball_y")) ** 2
-        + (F.col(Column.Z) - F.col("ball_z")) ** 2
+        (F.col(Column.X) - ball_x) ** 2
+        + (F.col(Column.Y) - ball_y) ** 2
+        + (F.col(Column.Z) - ball_z) ** 2
     )
-    players_ball = players.join(ball, on=Group.BY_FRAME, how="left").withColumn(
-        "ball_dist", dist
-    )
-
     bop_col = (
         F.col(Column.BALL_OWNING_PLAYER_ID)
         if Column.BALL_OWNING_PLAYER_ID in df.columns
         else F.lit(None).cast("string")
     )
-    per_frame = players_ball.withColumn("_bop", bop_col).groupBy(*Group.BY_FRAME).agg(
-        F.first(Column.BALL_OWNING_TEAM_ID, ignorenulls=True).alias("_bot0"),
-        F.first("_bop", ignorenulls=True).alias("_bop0"),
-        F.min("ball_dist").alias("_min_dist"),
-        F.min_by(Column.TEAM_ID, F.struct("ball_dist", Column.OBJECT_ID)).alias("_closest_team"),
-        F.min_by(Column.OBJECT_ID, F.struct("ball_dist", Column.OBJECT_ID)).alias("_closest_player"),
-    )
-    within = F.col("_min_dist") < ball_carrier_threshold
-    inferred = per_frame.select(
-        *Group.BY_FRAME,
-        F.coalesce(F.col("_bot0"), F.when(within, F.col("_closest_team"))).alias(
-            Column.BALL_OWNING_TEAM_ID
-        ),
-        F.coalesce(F.col("_bop0"), F.when(within, F.col("_closest_player"))).alias(
-            Column.BALL_OWNING_PLAYER_ID
-        ),
-    )
-    # the inferred owner must be on the owning team: carrier flag only set for
-    # the owning player's row (reference :613-667)
-    drop = [Column.BALL_OWNING_TEAM_ID]
-    if Column.BALL_OWNING_PLAYER_ID in df.columns:
-        drop.append(Column.BALL_OWNING_PLAYER_ID)
+    players = df.withColumn("_bop", bop_col).withColumn("ball_dist", F.when(is_player, dist))
+    # only players with a known distance compete: a struct with a NULL field
+    # is not NULL itself and would sort first
+    closest = F.when(F.col("ball_dist").isNotNull(), F.struct("ball_dist", Column.OBJECT_ID))
+    within = F.min("ball_dist").over(frame) < ball_carrier_threshold
+    keyed = F.lit(True)
+    for k in Group.BY_FRAME:  # a NULL frame key matches no frame
+        keyed = keyed & F.col(k).isNotNull()
+
+    def owner(given: str, closest_of: str):
+        return F.when(keyed, F.coalesce(
+            F.first(F.when(is_player, F.col(given)), ignorenulls=True).over(frame),
+            F.when(within, F.min_by(closest_of, closest).over(frame)),
+        ))
+
+    drop = {Column.BALL_OWNING_TEAM_ID, Column.BALL_OWNING_PLAYER_ID, *Group.BY_FRAME}
     return (
-        df.drop(*drop)
-        .join(inferred, on=Group.BY_FRAME, how="left")
+        players.select(
+            *Group.BY_FRAME,
+            *[c for c in df.columns if c not in drop],
+            owner(Column.BALL_OWNING_TEAM_ID, Column.TEAM_ID).alias(Column.BALL_OWNING_TEAM_ID),
+            owner("_bop", Column.OBJECT_ID).alias("_owner"),
+        )
+        # the carrier flag is only set on the owning player's row (reference :613-667)
         .withColumn(
             Column.IS_BALL_CARRIER,
-            F.col(Column.OBJECT_ID) == F.col(Column.BALL_OWNING_PLAYER_ID),
+            F.coalesce(F.col(Column.OBJECT_ID) == F.col("_owner"), F.lit(False)),
         )
-        .fillna({Column.IS_BALL_CARRIER: False})
-        .drop(Column.BALL_OWNING_PLAYER_ID)
+        .drop("_owner")
         .na.drop(subset=[Column.BALL_OWNING_TEAM_ID])
     )
 
